@@ -61,6 +61,13 @@ def _json_line(payload: dict) -> str:
     return line
 
 
+def _band(a, b):
+    """Spread between two runs of identical code, in percent of the
+    faster run, so it reads the same whichever run came first."""
+    lo = min(a, b)
+    return round(100.0 * abs(b - a) / lo, 1) if lo else None
+
+
 def _run(fn, spark, sf_dir) -> int:
     """Execute one query end-to-end; return its row count."""
     return len(fn(spark, sf_dir).toPandas())
@@ -268,9 +275,6 @@ def main() -> None:
     # the spread so every bench record carries its own noise estimate;
     # per-change attribution still comes from same-session A/Bs
     # (tools/opt_probe.py), never from cross-run split deltas.
-    def _band(a, b):
-        return round(100.0 * abs(b - a) / a, 1) if a else None
-
     drift = {
         "duckdb_band_pct": _band(duck_total, duck2_total)
         if duck_total and duck2_total

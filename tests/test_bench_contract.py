@@ -69,3 +69,7 @@ def test_json_line_rejects_nonfinite():
     payload["value"] = float("inf")
     with pytest.raises(ValueError):
         bench._json_line(payload)
+
+
+def test_drift_band_is_symmetric():
+    assert bench._band(1.0, 1.2) == bench._band(1.2, 1.0) == 20.0

@@ -5,6 +5,7 @@ must equal `read_changes(v-1, v)` exactly."""
 
 from __future__ import annotations
 
+import datetime
 import shutil
 import tempfile
 import uuid
@@ -365,5 +366,53 @@ def test_changes_across_schema_evolution_commits(spark):
             out.filter(F.col("_commit_version").isin(v_add, v_ren, v_drop)).count()
             == 0
         )
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_stream_timestamp_key_matches_read_changes(spark):
+    """A (symbol, ts)-keyed bars table with a `timestamp` key streams
+    the same rows as the batch change feed for each commit."""
+    ddl = "symbol string, ts timestamp, close double"
+    keys = ("symbol", "ts")
+    t = [datetime.datetime(2024, 3, 4, 14, 30 + i) for i in range(3)]
+    root = tempfile.mkdtemp(prefix=f"us_sdps_cdfts_{uuid.uuid4().hex[:8]}_")
+    try:
+        for rows in (
+            [("AAPL", t[0], 10.0), ("AAPL", t[1], 11.0), ("MSFT", t[0], 20.0)],
+            [("AAPL", t[1], 11.5), ("AAPL", t[2], 12.0)],
+            [("MSFT", t[0], 20.5), ("MSFT", t[1], 21.0)],
+        ):
+            V.versioned_merge_upsert(
+                spark, spark.createDataFrame(rows, ddl), root, key_cols=keys
+            )
+        register_cdf_source(spark)
+        sdf = (
+            spark.readStream.format("versioned_cdf")
+            .option("path", root)
+            .option("keycols", ",".join(keys))
+            .option("tableschema", ddl)
+            .option("startingversion", "1")
+            .load()
+        )
+        name = f"cdf_ts_{uuid.uuid4().hex[:8]}"
+        q = (
+            sdf.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None, q.exception()
+        out = spark.table(name)
+
+        def norm(df):
+            return sorted(tuple(r) for r in df.select(*keys, "close", "_change_type").collect())
+
+        for v in (2, 3):
+            batch = V.read_changes(spark, root, v - 1, v, key_cols=keys)
+            assert norm(out.filter(F.col("_commit_version") == v)) == norm(batch), v
+        assert out.count() == 4
     finally:
         shutil.rmtree(root, ignore_errors=True)

@@ -1241,3 +1241,65 @@ def test_describe_branches_metadata(spark, root):
     assert idle["fork_version"] == 1 and idle["head_version"] == 1
     assert idle["n_commits"] == 0 and idle["n_changed_partitions"] == 0
     assert idle["fork_pin_present"] is True
+
+
+def _evolve_rename_then_add(spark, root):
+    V.rename_column(spark, root, "val", "price")
+    V.add_column(spark, root, "note", "STRING")
+    return sorted(V.read_versioned(spark, root).columns), ["band", "k", "note", "price"]
+
+
+def _evolve_drop_then_branch(spark, root):
+    V.drop_column(spark, root, "val")
+    V.create_branch(spark, root, "dev")
+    cols = V.read_versioned(spark, V._branch_root(root, "dev")).columns
+    return sorted(cols), ["band", "k"]
+
+
+def _evolve_rename_then_clone(spark, root):
+    V.rename_column(spark, root, "val", "price")
+    V.shallow_clone(spark, root, root + "_clone")
+    return sorted(V.read_versioned(spark, root + "_clone").columns), ["band", "k", "price"]
+
+
+def _bloom_cols_after(alter):
+    def case(spark, root):
+        alter(spark, root)
+        head = V._read_manifest_doc(spark, root, V.current_version(spark, root))
+        return head.get("bloom_cols"), ["k"]
+
+    return case
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        _evolve_rename_then_add,
+        _evolve_drop_then_branch,
+        _evolve_rename_then_clone,
+        _bloom_cols_after(lambda s, r: V.add_column(s, r, "note", "STRING")),
+        _bloom_cols_after(lambda s, r: V.drop_column(s, r, "val")),
+        _bloom_cols_after(lambda s, r: V.rename_column(s, r, "val", "price")),
+    ],
+    ids=[
+        "rename_then_add_column",
+        "drop_then_create_branch",
+        "rename_then_shallow_clone",
+        "bloom_then_add_column",
+        "bloom_then_drop_column",
+        "bloom_then_rename_column",
+    ],
+)
+def test_commits_carry_table_metadata_forward(spark, root, case):
+    """Every commit type carries the table metadata it does not change:
+    schema evolution, bloom columns. A metadata-only commit, a branch or
+    a clone that drops one resurfaces a dropped or renamed column or
+    loses the bloom index."""
+    df = spark.createDataFrame(
+        [(i, i % 2, i * 10) for i in range(4)], "k long, band long, val long"
+    )
+    V.versioned_merge_upsert(
+        spark, df, root, key_cols=("k",), partition_cols=("band",), bloom_cols=("k",)
+    )
+    got, want = case(spark, root)
+    assert got == want

@@ -56,18 +56,15 @@ import os
 import posixpath
 from urllib.parse import unquote
 
+from us_stock_data_pipeline_spark.etl.versioned import (
+    _dir_version,
+    _manifest_name,
+    _manifest_version,
+)
+
 # --------------------------------------------------------------------------
 # driver-side manifest helpers (no SparkSession in the DataSource API)
 # --------------------------------------------------------------------------
-
-
-def _mver(name: str) -> int | None:
-    if name.startswith("v") and name.endswith(".json"):
-        try:
-            return int(name[1:-5])
-        except ValueError:
-            return None
-    return None
 
 
 def _committed_versions(root: str) -> list[int]:
@@ -76,11 +73,11 @@ def _committed_versions(root: str) -> list[int]:
         names = os.listdir(d)
     except FileNotFoundError:
         return []
-    return sorted(v for n in names if (v := _mver(n)) is not None)
+    return sorted(v for n in names if (v := _manifest_version(n)) is not None)
 
 
 def _doc(root: str, version: int) -> dict:
-    with open(os.path.join(root, "manifests", f"v{version:08d}.json")) as f:
+    with open(os.path.join(root, "manifests", _manifest_name(version))) as f:
         return json.load(f)
 
 
@@ -103,18 +100,13 @@ def _partition_values(part_dir: str) -> list[tuple[str, str]]:
     return out
 
 
-def _dir_ver(vdir: str) -> int:
-    """versions/v00000007-abcd1234 -> 7 (the commit that wrote the dir)."""
-    return int(vdir.rsplit("/", 1)[-1][1:9])
-
-
 def _gating_dv_files(root: str, dvs: list[dict], data_dir: str) -> list[str]:
     """Parquet files of every DV that POSTDATES `data_dir` (same version
     scoping as the batch reader's `_apply_dvs`): these keys are already
     deleted in the snapshot that manifest describes, so they must be
     filtered out of the image before diffing — otherwise keys deleted by
     an EARLIER commit re-emit as spurious deletes (advisor r12 low)."""
-    dv = _dir_ver(data_dir)
+    dv = _dir_version(data_dir)
     return [
         f
         for d in dvs
@@ -207,7 +199,7 @@ def make_cdf_datasource():
                         for d in sorted(pparts)
                         if d not in touched
                         and any(
-                            dv["version"] >= _dir_ver(pparts[d])
+                            dv["version"] >= _dir_version(pparts[d])
                             for dv in removed_dvs
                         )
                     ]
@@ -295,11 +287,17 @@ def make_cdf_datasource():
             import pyarrow.parquet as pq
 
             def _py(x, col=None):
-                """numpy scalar / NaN -> plain Python for the row tuple.
-                An outer merge upcasts int columns with absent rows to
-                float64, so integer-declared columns are cast back."""
-                if x is None or (isinstance(x, (float, np.floating)) and np.isnan(x)):
+                """numpy scalar / NaN / NaT -> plain Python for the row
+                tuple. An outer merge upcasts int columns with absent
+                rows to float64, so integer-declared columns are cast
+                back. Parquet timestamps are UTC instants that pyarrow
+                hands over tz-naive: they leave as UTC datetimes."""
+                if x is None or x is pd.NaT:
                     return None
+                if isinstance(x, (float, np.floating)) and np.isnan(x):
+                    return None
+                if isinstance(x, pd.Timestamp):
+                    return (x if x.tzinfo else x.tz_localize("UTC")).to_pydatetime()
                 if isinstance(x, np.generic):
                     x = x.item()
                 if col is not None and col_types.get(col) in (

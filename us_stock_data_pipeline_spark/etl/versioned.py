@@ -34,6 +34,13 @@ Design (a minimal Iceberg/Delta-log hybrid):
   the publish primitive is link(2) (`java.nio Files.createLink`) — a
   true compare-and-swap that fails EEXIST instead of clobbering; on
   HDFS/object stores the native no-replace rename contract is used.
+- **One commit path** (`_commit`). The next manifest is the base
+  manifest minus the per-commit markers (`version`, `committed_at`,
+  `restored_from`, `merged_from_branch`) plus the fields the operation
+  changes; everything else — zone maps, constraints, schema evolution,
+  bloom columns — rides forward untouched. RESTORE carries the target
+  manifest instead of the head; branches and shallow clones carry the
+  source manifest with its paths made absolute.
 - Old manifests stay readable => **time travel** (`read_versioned(...,
   version=N)`) until vacuumed; **tags** (`create_tag`) pin snapshots by
   name (CAS-published, create-only, vacuum-protected) and
@@ -338,6 +345,10 @@ def _leaf_partition_dirs(spark: SparkSession, base: str, depth: int) -> list[str
 # --------------------------------------------------------------------------
 
 
+def _manifest_name(version: int) -> str:
+    return f"v{version:08d}.json"
+
+
 def _manifest_version(name: str) -> int | None:
     if name.startswith("v") and name.endswith(".json"):
         try:
@@ -358,10 +369,8 @@ def current_version(spark: SparkSession, root: str) -> int:
 
 
 def _read_manifest_doc(spark: SparkSession, root: str, version: int) -> dict:
-    body = _read_file(
-        spark, posixpath.join(root, _MANIFESTS, f"v{version:08d}.json")
-    )
-    return json.loads(body)
+    path = posixpath.join(root, _MANIFESTS, _manifest_name(version))
+    return json.loads(_read_file(spark, path))
 
 
 def read_manifest(spark: SparkSession, root: str, version: int) -> dict[str, str]:
@@ -382,6 +391,79 @@ def _dir_version(ver_dir: str) -> int:
     -> 2: the commit version that wrote a data directory."""
     name = ver_dir.rsplit("/", 1)[-1]
     return int(name[1:9])
+
+
+# --------------------------------------------------------------------------
+# The commit path: one carry-forward rule, one CAS publish
+# --------------------------------------------------------------------------
+
+# Fields that describe ONE commit, not the table: never carried forward.
+_COMMIT_MARKERS = ("version", "committed_at", "restored_from", "merged_from_branch")
+
+# The base the first commit of a new table builds on.
+_EMPTY_MANIFEST = {
+    "partitions": {},
+    "deletion_vectors": [],
+    "stats_cols": [],
+    "file_stats": {},
+    "constraints": {},
+}
+
+
+def _carry_forward(base: dict, **changes) -> dict:
+    """The next manifest body: `base` minus the per-commit markers, plus
+    the fields the operation changes. A table field the operation does
+    not name is carried verbatim, so no commit type can silently drop
+    metadata another commit type recorded."""
+    doc = {k: v for k, v in base.items() if k not in _COMMIT_MARKERS}
+    doc.update(changes)
+    return doc
+
+
+def _publish(spark: SparkSession, dir_path: str, name: str, obj) -> bool:
+    """One create-only publish attempt: write `obj` as JSON to a private
+    tmp file in `dir_path`, then CAS it to `name` (`_rename`). On a lost
+    race the tmp file is deleted and False is returned."""
+    tmp = posixpath.join(dir_path, f".tmp_{uuid.uuid4().hex}.json")
+    _write_file(spark, tmp, json.dumps(obj, sort_keys=True))
+    if _rename(spark, tmp, posixpath.join(dir_path, name)):
+        return True
+    _delete(spark, tmp)
+    return False
+
+
+def _commit(
+    spark: SparkSession,
+    root: str,
+    op: str,
+    build,
+    retries: int = 5,
+    above: int = 0,
+    create: bool = False,
+) -> int:
+    """Commit one table version by optimistic concurrency; returns it.
+
+    Each attempt reads the head manifest (`base`; `_EMPTY_MANIFEST` for a
+    table with no commits, allowed only with `create`), numbers the new
+    version above both the head and `above`, and publishes
+    `build(base_ver, new_ver, base)` (which must not mutate `base`)
+    stamped with the version and commit time. A lost race retries against the winner's manifest; whatever
+    the lost attempt staged under its unique names is left as an orphan
+    for `vacuum_versions`."""
+    for attempt in range(retries):
+        base_ver = current_version(spark, root)
+        if base_ver == 0 and not create:
+            raise FileNotFoundError(f"no committed version under {root}")
+        base = (
+            _read_manifest_doc(spark, root, base_ver) if base_ver else _EMPTY_MANIFEST
+        )
+        new_ver = max(base_ver, above) + 1
+        doc = build(base_ver, new_ver, base)
+        doc.update(version=new_ver, committed_at=_now_ms(spark))
+        manifests = posixpath.join(root, _MANIFESTS)
+        if _publish(spark, manifests, _manifest_name(new_ver), doc):
+            return new_ver
+    raise RuntimeError(f"{op} lost {retries} commit races at {root}")
 
 
 def _apply_dvs(
@@ -795,12 +877,9 @@ def add_constraint(
     version."""
     if not expr or not expr.strip():
         raise ValueError("empty constraint expression")
-    for attempt in range(5):
-        base_ver = current_version(spark, root)
-        if base_ver == 0:
-            raise FileNotFoundError(f"no committed version under {root}")
-        doc = _read_manifest_doc(spark, root, base_ver)
-        cons = dict(doc.get("constraints", {}))
+
+    def build(base_ver: int, new_ver: int, doc: dict) -> dict:
+        cons = doc.get("constraints", {})
         if name in cons:
             raise ValueError(f"constraint {name!r} already exists")
         # existing data must satisfy the new constraint (else readers
@@ -808,83 +887,23 @@ def add_constraint(
         _enforce_constraints(
             spark, read_versioned(spark, root, base_ver), {name: expr}
         )
-        cons[name] = expr
-        new_ver = base_ver + 1
-        body = json.dumps(
-            {
-                "version": new_ver,
-                "committed_at": _now_ms(spark),
-                "partitions": doc.get("partitions", {}),
-                "deletion_vectors": doc.get("deletion_vectors", []),
-                "stats_cols": doc.get("stats_cols", []),
-                "file_stats": doc.get("file_stats", {}),
-                "constraints": cons,
-                **_schema_meta(doc),
-            },
-            sort_keys=True,
-        )
-        tmp = posixpath.join(root, _MANIFESTS, f".tmp_{uuid.uuid4().hex}.json")
-        final = posixpath.join(root, _MANIFESTS, f"v{new_ver:08d}.json")
-        _write_file(spark, tmp, body)
-        if _rename(spark, tmp, final):
-            return new_ver
-        _delete(spark, tmp)
-    raise RuntimeError(f"add_constraint lost 5 commit races at {root}")
+        return _carry_forward(doc, constraints={**cons, name: expr})
+
+    return _commit(spark, root, "add_constraint", build)
 
 
 def drop_constraint(spark: SparkSession, root: str, name: str) -> int:
     """Remove a CHECK constraint (metadata-only commit); returns the
     committed version. Unknown names raise KeyError."""
-    for attempt in range(5):
-        base_ver = current_version(spark, root)
-        if base_ver == 0:
-            raise FileNotFoundError(f"no committed version under {root}")
-        doc = _read_manifest_doc(spark, root, base_ver)
+
+    def build(base_ver: int, new_ver: int, doc: dict) -> dict:
         cons = dict(doc.get("constraints", {}))
         if name not in cons:
             raise KeyError(f"no constraint named {name!r}")
         del cons[name]
-        new_ver = base_ver + 1
-        body = json.dumps(
-            {
-                "version": new_ver,
-                "committed_at": _now_ms(spark),
-                "partitions": doc.get("partitions", {}),
-                "deletion_vectors": doc.get("deletion_vectors", []),
-                "stats_cols": doc.get("stats_cols", []),
-                "file_stats": doc.get("file_stats", {}),
-                "constraints": cons,
-                **_schema_meta(doc),
-            },
-            sort_keys=True,
-        )
-        tmp = posixpath.join(root, _MANIFESTS, f".tmp_{uuid.uuid4().hex}.json")
-        final = posixpath.join(root, _MANIFESTS, f"v{new_ver:08d}.json")
-        _write_file(spark, tmp, body)
-        if _rename(spark, tmp, final):
-            return new_ver
-        _delete(spark, tmp)
-    raise RuntimeError(f"drop_constraint lost 5 commit races at {root}")
+        return _carry_forward(doc, constraints=cons)
 
-
-def _schema_meta(doc: dict) -> dict:
-    """Schema-evolution metadata (`added_columns`, `dropped_columns`,
-    `renamed_columns`) that EVERY commit type must carry forward
-    verbatim — merge, DV, restore, branch merge, compaction, constraint
-    edits. Manifest bodies are built by explicit key lists at each
-    commit site; this helper is spread (**) into each so a new schema
-    commit can never be silently dropped by an unrelated commit
-    type."""
-    return {
-        k: doc[k]
-        for k in (
-            "added_columns",
-            "dropped_columns",
-            "renamed_columns",
-            "bloom_cols",
-        )
-        if doc.get(k)
-    }
+    return _commit(spark, root, "drop_constraint", build)
 
 
 def _rename_map(doc: dict) -> dict[str, str]:
@@ -916,14 +935,10 @@ def add_column(spark: SparkSession, root: str, col: str, ddl_type: str) -> int:
     physical values would resurface (document'd rewrite required)."""
     # validate the DDL type with Spark's own parser
     spark.createDataFrame([], f"`{col}` {ddl_type}")
-    for attempt in range(5):
-        base_ver = current_version(spark, root)
-        if base_ver == 0:
-            raise FileNotFoundError(f"no committed version under {root}")
-        doc = _read_manifest_doc(spark, root, base_ver)
-        added = [tuple(x) for x in doc.get("added_columns", [])]
-        dropped = list(doc.get("dropped_columns", []))
-        if col in dropped:
+
+    def build(base_ver: int, new_ver: int, doc: dict) -> dict:
+        added = doc.get("added_columns", [])
+        if col in doc.get("dropped_columns", []):
             raise ValueError(
                 f"column {col!r} was dropped; re-adding it would resurface "
                 "old physical values — rewrite the table instead"
@@ -937,29 +952,9 @@ def add_column(spark: SparkSession, root: str, col: str, ddl_type: str) -> int:
                 f"{col!r} is the physical name behind a renamed column; "
                 "adding it would resurface old values — rewrite instead"
             )
-        added.append((col, ddl_type))
-        new_ver = base_ver + 1
-        body = json.dumps(
-            {
-                "version": new_ver,
-                "committed_at": _now_ms(spark),
-                "partitions": doc.get("partitions", {}),
-                "deletion_vectors": doc.get("deletion_vectors", []),
-                "stats_cols": doc.get("stats_cols", []),
-                "file_stats": doc.get("file_stats", {}),
-                "constraints": doc.get("constraints", {}),
-                "added_columns": [list(x) for x in added],
-                "dropped_columns": dropped,
-            },
-            sort_keys=True,
-        )
-        tmp = posixpath.join(root, _MANIFESTS, f".tmp_{uuid.uuid4().hex}.json")
-        final = posixpath.join(root, _MANIFESTS, f"v{new_ver:08d}.json")
-        _write_file(spark, tmp, body)
-        if _rename(spark, tmp, final):
-            return new_ver
-        _delete(spark, tmp)
-    raise RuntimeError(f"add_column lost 5 commit races at {root}")
+        return _carry_forward(doc, added_columns=added + [[col, ddl_type]])
+
+    return _commit(spark, root, "add_column", build)
 
 
 def drop_column(spark: SparkSession, root: str, col: str) -> int:
@@ -968,11 +963,8 @@ def drop_column(spark: SparkSession, root: str, col: str) -> int:
     from every snapshot at or after this commit. Rejected when a CHECK
     constraint references the column (word-boundary match, the same
     conservatism Delta applies)."""
-    for attempt in range(5):
-        base_ver = current_version(spark, root)
-        if base_ver == 0:
-            raise FileNotFoundError(f"no committed version under {root}")
-        doc = _read_manifest_doc(spark, root, base_ver)
+
+    def build(base_ver: int, new_ver: int, doc: dict) -> dict:
         cols = read_versioned(spark, root, base_ver).columns
         if col not in cols:
             raise KeyError(f"no column {col!r}; have {sorted(cols)}")
@@ -983,34 +975,16 @@ def drop_column(spark: SparkSession, root: str, col: str) -> int:
                 )
         renames = _rename_map(doc)
         phys = renames.pop(col, col)  # record the PHYSICAL name
-        added = [
-            [c, t] for c, t in doc.get("added_columns", []) if c != phys
-        ]
-        dropped = list(doc.get("dropped_columns", []))
-        dropped.append(phys)
-        new_ver = base_ver + 1
-        body = json.dumps(
-            {
-                "version": new_ver,
-                "committed_at": _now_ms(spark),
-                "partitions": doc.get("partitions", {}),
-                "deletion_vectors": doc.get("deletion_vectors", []),
-                "stats_cols": doc.get("stats_cols", []),
-                "file_stats": doc.get("file_stats", {}),
-                "constraints": doc.get("constraints", {}),
-                "added_columns": added,
-                "dropped_columns": dropped,
-                "renamed_columns": sorted([v, p] for v, p in renames.items()),
-            },
-            sort_keys=True,
+        return _carry_forward(
+            doc,
+            added_columns=[
+                [c, t] for c, t in doc.get("added_columns", []) if c != phys
+            ],
+            dropped_columns=list(doc.get("dropped_columns", [])) + [phys],
+            renamed_columns=sorted([v, p] for v, p in renames.items()),
         )
-        tmp = posixpath.join(root, _MANIFESTS, f".tmp_{uuid.uuid4().hex}.json")
-        final = posixpath.join(root, _MANIFESTS, f"v{new_ver:08d}.json")
-        _write_file(spark, tmp, body)
-        if _rename(spark, tmp, final):
-            return new_ver
-        _delete(spark, tmp)
-    raise RuntimeError(f"drop_column lost 5 commit races at {root}")
+
+    return _commit(spark, root, "drop_column", build)
 
 
 def rename_column(spark: SparkSession, root: str, old: str, new: str) -> int:
@@ -1024,11 +998,8 @@ def rename_column(spark: SparkSession, root: str, old: str, new: str) -> int:
     text would dangle)."""
     if old == new:
         raise ValueError("RENAME COLUMN requires a different name")
-    for attempt in range(5):
-        base_ver = current_version(spark, root)
-        if base_ver == 0:
-            raise FileNotFoundError(f"no committed version under {root}")
-        doc = _read_manifest_doc(spark, root, base_ver)
+
+    def build(base_ver: int, new_ver: int, doc: dict) -> dict:
         cols = read_versioned(spark, root, base_ver).columns
         if old not in cols:
             raise KeyError(f"no column {old!r}; have {sorted(cols)}")
@@ -1052,32 +1023,14 @@ def rename_column(spark: SparkSession, root: str, old: str, new: str) -> int:
                 "column; two visible names cannot share one physical"
             )
         renames[new] = phys
-        # an ADDed column renames by rewriting its own record (its
-        # recorded name IS the physical name future writes use, so
-        # pointing the mapping at it keeps write translation uniform)
-        new_ver = base_ver + 1
-        body = json.dumps(
-            {
-                "version": new_ver,
-                "committed_at": _now_ms(spark),
-                "partitions": doc.get("partitions", {}),
-                "deletion_vectors": doc.get("deletion_vectors", []),
-                "stats_cols": doc.get("stats_cols", []),
-                "file_stats": doc.get("file_stats", {}),
-                "constraints": doc.get("constraints", {}),
-                "added_columns": doc.get("added_columns", []),
-                "dropped_columns": doc.get("dropped_columns", []),
-                "renamed_columns": sorted([v, p] for v, p in renames.items()),
-            },
-            sort_keys=True,
+        # an ADDed column renames through the same mapping (its recorded
+        # name IS the physical name future writes use, so pointing the
+        # mapping at it keeps write translation uniform)
+        return _carry_forward(
+            doc, renamed_columns=sorted([v, p] for v, p in renames.items())
         )
-        tmp = posixpath.join(root, _MANIFESTS, f".tmp_{uuid.uuid4().hex}.json")
-        final = posixpath.join(root, _MANIFESTS, f"v{new_ver:08d}.json")
-        _write_file(spark, tmp, body)
-        if _rename(spark, tmp, final):
-            return new_ver
-        _delete(spark, tmp)
-    raise RuntimeError(f"rename_column lost 5 commit races at {root}")
+
+    return _commit(spark, root, "rename_column", build)
 
 
 def versioned_merge_upsert(
@@ -1232,18 +1185,15 @@ def versioned_merge_upsert(
                 .parquet(del_scratch)
                 .select(*key_cols)
             )
-        _staged_moved = False  # scratch renamed into a version dir
-        for attempt in range(max_commit_retries):
-            base_ver = current_version(spark, root)
-            new_ver = base_ver + 1
+        staged_moved = False  # scratch renamed into a version dir
+
+        def attempt(base_ver: int, new_ver: int, doc: dict) -> dict:
+            nonlocal staged, staged_moved
             # Unique per ATTEMPT: a racer computing the same new_ver
             # writes a different dir, so a lost race can never clobber
             # (or later reclaim) the winner's committed data.
             ver_dir = posixpath.join(
                 _VERSIONS, f"v{new_ver:08d}-{uuid.uuid4().hex[:8]}"
-            )
-            doc = (
-                _read_manifest_doc(spark, root, base_ver) if base_ver else {}
             )
             manifest = doc.get("partitions", {})
             dvs = doc.get("deletion_vectors", [])
@@ -1276,7 +1226,7 @@ def versioned_merge_upsert(
                     # NULL, mirroring read_versioned's union semantics.
                     merged = merged.unionByName(keep, allowMissingColumns=True)
             abs_ver = posixpath.join(root, ver_dir)
-            if merged is staged and not _staged_moved:
+            if merged is staged and not staged_moved:
                 # No existing rows to merge (base commit, or a commit
                 # touching only brand-new partitions): the staged scratch
                 # dir already holds EXACTLY the bytes the version dir
@@ -1289,7 +1239,7 @@ def versioned_merge_upsert(
                     # retries (lost CAS) must re-read the batch from its
                     # new home; the moved dir is unreferenced until the
                     # manifest publishes, an orphan for vacuum if we lose
-                    _staged_moved = True
+                    staged_moved = True
                     staged = (
                         spark.read.schema(staged_schema)
                         .option("basePath", abs_ver)
@@ -1350,36 +1300,18 @@ def versioned_merge_upsert(
                     spark, root, ver_dir, bl_cols
                 ).items():
                     new_stats.setdefault(f, {})["__bloom__"] = colmap
-            body = json.dumps(
-                {
-                    "version": new_ver,
-                    "committed_at": _now_ms(spark),
-                    "partitions": new_manifest,
-                    # Carried forward: DVs still gate UNTOUCHED partitions'
-                    # older dirs; rewritten dirs are above their horizon.
-                    "deletion_vectors": dvs,
-                    "stats_cols": list(eff_stats_cols),
-                    "file_stats": new_stats,
-                    "constraints": doc.get("constraints", {}),
-                    **_schema_meta(doc),
-                    "bloom_cols": list(eff_bloom_cols),
-                },
-                sort_keys=True,
+            # Deletion vectors carry forward: they still gate UNTOUCHED
+            # partitions' older dirs; rewritten dirs are above their horizon.
+            return _carry_forward(
+                doc,
+                partitions=new_manifest,
+                stats_cols=list(eff_stats_cols),
+                file_stats=new_stats,
+                bloom_cols=list(eff_bloom_cols),
             )
-            tmp = posixpath.join(
-                root, _MANIFESTS, f".tmp_{uuid.uuid4().hex}.json"
-            )
-            final = posixpath.join(root, _MANIFESTS, f"v{new_ver:08d}.json")
-            _write_file(spark, tmp, body)
-            if _rename(spark, tmp, final):
-                return new_ver
-            # Lost the race: another writer committed new_ver first.
-            # Delete only OUR tmp manifest; the attempt's data dir is
-            # left as an orphan for the age-gated vacuum — its unique
-            # name guarantees no other writer's manifest references it.
-            _delete(spark, tmp)
-        raise RuntimeError(
-            f"versioned commit lost {max_commit_retries} races at {root}"
+
+        return _commit(
+            spark, root, "versioned commit", attempt, max_commit_retries, create=True
         )
     finally:
         _delete(spark, scratch)
@@ -1430,36 +1362,20 @@ def versioned_delete(
     keys.select(*key_cols).dropDuplicates().coalesce(1).write.mode(
         "overwrite"
     ).parquet(posixpath.join(root, dv_dir))
-    for attempt in range(max_commit_retries):
-        base_ver = current_version(spark, root)
-        if base_ver == 0:
-            raise FileNotFoundError(f"no committed version under {root}")
-        new_ver = base_ver + 1
-        doc = _read_manifest_doc(spark, root, base_ver)
-        body = json.dumps(
-            {
-                "version": new_ver,
-                "committed_at": _now_ms(spark),
-                "partitions": doc["partitions"],
-                "deletion_vectors": doc.get("deletion_vectors", [])
-                + [{"dir": dv_dir, "version": new_ver}],
-                # zone maps survive a DV commit untouched: the data files
-                # are unchanged (stats stay VALID upper bounds; DV-deleted
-                # rows only make them conservative)
-                "stats_cols": doc.get("stats_cols", []),
-                "file_stats": doc.get("file_stats", {}),
-                "constraints": doc.get("constraints", {}),
-                **_schema_meta(doc),
-            },
-            sort_keys=True,
-        )
-        tmp = posixpath.join(root, _MANIFESTS, f".tmp_{uuid.uuid4().hex}.json")
-        final = posixpath.join(root, _MANIFESTS, f"v{new_ver:08d}.json")
-        _write_file(spark, tmp, body)
-        if _rename(spark, tmp, final):
-            return new_ver
-        _delete(spark, tmp)
-    raise RuntimeError(f"delete commit lost {max_commit_retries} races at {root}")
+    # Zone maps survive a DV commit untouched: the data files are
+    # unchanged (stats stay VALID upper bounds; DV-deleted rows only make
+    # them conservative).
+    return _commit(
+        spark,
+        root,
+        "delete commit",
+        lambda base_ver, new_ver, doc: _carry_forward(
+            doc,
+            deletion_vectors=doc.get("deletion_vectors", [])
+            + [{"dir": dv_dir, "version": new_ver}],
+        ),
+        max_commit_retries,
+    )
 
 
 def read_changes(
@@ -1719,13 +1635,9 @@ def create_tag(
         raise FileNotFoundError(f"no committed version under {root}")
     # validate the target exists before publishing the ref
     _read_manifest_doc(spark, root, version)
-    _mkdirs(spark, posixpath.join(root, _REFS))
-    body = json.dumps({"name": name, "version": version}, sort_keys=True)
-    tmp = posixpath.join(root, _REFS, f".tmp_{uuid.uuid4().hex}.json")
-    final = posixpath.join(root, _REFS, f"{name}.json")
-    _write_file(spark, tmp, body)
-    if not _rename(spark, tmp, final):
-        _delete(spark, tmp)
+    refs = posixpath.join(root, _REFS)
+    _mkdirs(spark, refs)
+    if not _publish(spark, refs, f"{name}.json", {"name": name, "version": version}):
         raise FileExistsError(f"tag {name!r} already exists at {root}")
     # Re-validate AFTER publishing (r10, VERDICT r9 #7): a concurrent
     # vacuum lists refs before purging expired manifests, so a ref
@@ -1738,7 +1650,7 @@ def create_tag(
     try:
         _read_manifest_doc(spark, root, version)
     except Exception:
-        _delete(spark, final)
+        _delete(spark, posixpath.join(refs, f"{name}.json"))
         raise FileNotFoundError(
             f"tag {name!r} lost a race with vacuum: version {version} was "
             f"reclaimed before the ref pinned it; the ref was removed"
@@ -1771,32 +1683,12 @@ def restore_version(spark: SparkSession, root: str, version: int) -> int:
     investigate the broken commits at leisure. Races through the same
     manifest CAS as merges."""
     target = _read_manifest_doc(spark, root, version)
-    for attempt in range(5):
-        base_ver = current_version(spark, root)
-        if base_ver == 0:
-            raise FileNotFoundError(f"no committed version under {root}")
-        new_ver = base_ver + 1
-        body = json.dumps(
-            {
-                "version": new_ver,
-                "committed_at": _now_ms(spark),
-                "partitions": target["partitions"],
-                "deletion_vectors": target.get("deletion_vectors", []),
-                "stats_cols": target.get("stats_cols", []),
-                "file_stats": target.get("file_stats", {}),
-                "constraints": target.get("constraints", {}),
-                **_schema_meta(target),
-                "restored_from": version,
-            },
-            sort_keys=True,
-        )
-        tmp = posixpath.join(root, _MANIFESTS, f".tmp_{uuid.uuid4().hex}.json")
-        final = posixpath.join(root, _MANIFESTS, f"v{new_ver:08d}.json")
-        _write_file(spark, tmp, body)
-        if _rename(spark, tmp, final):
-            return new_ver
-        _delete(spark, tmp)
-    raise RuntimeError(f"restore lost 5 commit races at {root}")
+    return _commit(
+        spark,
+        root,
+        "restore",
+        lambda base_ver, new_ver, doc: _carry_forward(target, restored_from=version),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1819,6 +1711,26 @@ def _abs_under(base: str, p: str) -> str:
     absolute path; posixpath.join already passes absolutes through, this
     helper just names the convention)."""
     return p if p.startswith("/") or "://" in p else posixpath.join(base, p)
+
+
+def _rebased(doc: dict, src_root: str) -> dict:
+    """`doc`, a manifest of the table at `src_root`, carried into another
+    table's lineage: every data, DV and zone-map path resolved to an
+    absolute one under `src_root`, so the new table reads the source's
+    files without copying them."""
+    return _carry_forward(
+        doc,
+        partitions={
+            d: _abs_under(src_root, v) for d, v in doc.get("partitions", {}).items()
+        },
+        deletion_vectors=[
+            {**dv, "dir": _abs_under(src_root, dv["dir"])}
+            for dv in doc.get("deletion_vectors", [])
+        ],
+        file_stats={
+            _abs_under(src_root, k): v for k, v in doc.get("file_stats", {}).items()
+        },
+    )
 
 
 def create_branch(spark: SparkSession, root: str, name: str) -> int:
@@ -1852,20 +1764,9 @@ def create_branch(spark: SparkSession, root: str, name: str) -> int:
     broot = _branch_root(root, name)
     doc = _read_manifest_doc(spark, root, fork)
     bdoc = {
+        **_rebased(doc, root),
         "version": fork,
         "committed_at": doc.get("committed_at", 0),
-        "partitions": {
-            d: _abs_under(root, v) for d, v in doc.get("partitions", {}).items()
-        },
-        "deletion_vectors": [
-            {**dv, "dir": _abs_under(root, dv["dir"])}
-            for dv in doc.get("deletion_vectors", [])
-        ],
-        "stats_cols": doc.get("stats_cols", []),
-        "file_stats": {
-            _abs_under(root, k): v for k, v in doc.get("file_stats", {}).items()
-        },
-        "constraints": doc.get("constraints", {}),
     }
     _mkdirs(spark, posixpath.join(broot, _MANIFESTS))
     _write_file(
@@ -1873,11 +1774,9 @@ def create_branch(spark: SparkSession, root: str, name: str) -> int:
         posixpath.join(broot, "meta.json"),
         json.dumps({"name": name, "fork_version": fork}, sort_keys=True),
     )
-    tmp = posixpath.join(broot, _MANIFESTS, f".tmp_{uuid.uuid4().hex}.json")
-    final = posixpath.join(broot, _MANIFESTS, f"v{fork:08d}.json")
-    _write_file(spark, tmp, json.dumps(bdoc, sort_keys=True))
-    if not _rename(spark, tmp, final):
-        _delete(spark, tmp)
+    if not _publish(
+        spark, posixpath.join(broot, _MANIFESTS), _manifest_name(fork), bdoc
+    ):
         raise FileExistsError(f"branch {name!r} already exists at {root}")
     return fork
 
@@ -1917,22 +1816,9 @@ def shallow_clone(
         pass  # re-clone to the same destination path after a failure
     doc = _read_manifest_doc(spark, src_root, version)
     cdoc = {
+        **_rebased(doc, src_root),
         "version": version,
         "committed_at": _now_ms(spark),
-        "partitions": {
-            d: _abs_under(src_root, v)
-            for d, v in doc.get("partitions", {}).items()
-        },
-        "deletion_vectors": [
-            {**dv, "dir": _abs_under(src_root, dv["dir"])}
-            for dv in doc.get("deletion_vectors", [])
-        ],
-        "stats_cols": doc.get("stats_cols", []),
-        "file_stats": {
-            _abs_under(src_root, k): v
-            for k, v in doc.get("file_stats", {}).items()
-        },
-        "constraints": doc.get("constraints", {}),
     }
     _mkdirs(spark, posixpath.join(dst_root, _MANIFESTS))
     _write_file(
@@ -1942,11 +1828,9 @@ def shallow_clone(
             {"cloned_from": src_root, "clone_version": version}, sort_keys=True
         ),
     )
-    tmp = posixpath.join(dst_root, _MANIFESTS, f".tmp_{uuid.uuid4().hex}.json")
-    final = posixpath.join(dst_root, _MANIFESTS, f"v{version:08d}.json")
-    _write_file(spark, tmp, json.dumps(cdoc, sort_keys=True))
-    if not _rename(spark, tmp, final):
-        _delete(spark, tmp)
+    if not _publish(
+        spark, posixpath.join(dst_root, _MANIFESTS), _manifest_name(version), cdoc
+    ):
         raise FileExistsError(f"clone raced at {dst_root}")
     return version
 
@@ -2015,11 +1899,8 @@ def copy_into(
     )
     log_dir = posixpath.join(root, _COPY_LOG)
     _mkdirs(spark, log_dir)
-    tmp = posixpath.join(log_dir, f".tmp_{uuid.uuid4().hex}.json")
-    final = posixpath.join(log_dir, f"v{ver:08d}.json")
-    _write_file(spark, tmp, json.dumps(sorted(new), sort_keys=True))
-    if not _rename(spark, tmp, final):
-        _delete(spark, tmp)  # a racer logged this version; keys dedup
+    # a lost publish means a racer logged this version; keys dedup
+    _publish(spark, log_dir, _manifest_name(ver), sorted(new))
     return {
         "version": ver,
         "n_files_loaded": len(new),
@@ -2115,9 +1996,7 @@ def merge_branch(
         moved_dsts.add(dst)
         return rel
 
-    for attempt in range(max_commit_retries):
-        mc = current_version(spark, root)
-        mdoc = _read_manifest_doc(spark, root, mc)
+    def build(mc: int, new_ver: int, mdoc: dict) -> dict:
         mparts = {
             d: _abs_under(root, v) for d, v in mdoc.get("partitions", {}).items()
         }
@@ -2160,7 +2039,6 @@ def merge_branch(
                 f"concurrent commit numbers, so the merge refuses rather "
                 f"than guessing"
             )
-        new_ver = max(mc, bhead) + 1
         merged_parts = dict(mdoc.get("partitions", {}))
         for d, v in changed.items():
             merged_parts[d] = (
@@ -2195,20 +2073,6 @@ def merge_branch(
                 tuple(mdoc.get("stats_cols", ())) + tuple(bdoc.get("stats_cols", ()))
             )
         )
-        body = json.dumps(
-            {
-                "version": new_ver,
-                "committed_at": _now_ms(spark),
-                "partitions": merged_parts,
-                "deletion_vectors": merged_dvs,
-                "stats_cols": stats_cols,
-                "file_stats": merged_stats,
-                "constraints": mdoc.get("constraints", {}),
-                **_schema_meta(mdoc),
-                "merged_from_branch": {"name": name, "fork_version": fork},
-            },
-            sort_keys=True,
-        )
         # Backstop to the mtime refresh (advisor r10): verify every
         # moved dir still exists immediately before the CAS publish, so
         # a vacuum that somehow reclaimed one turns into a loud error
@@ -2219,14 +2083,21 @@ def merge_branch(
                 f"merge_branch: moved dir(s) vanished before publish "
                 f"(concurrent vacuum?): {vanished}"
             )
-        tmp = posixpath.join(root, _MANIFESTS, f".tmp_{uuid.uuid4().hex}.json")
-        final = posixpath.join(root, _MANIFESTS, f"v{new_ver:08d}.json")
-        _write_file(spark, tmp, body)
-        if _rename(spark, tmp, final):
-            delete_branch(spark, root, name)
-            return new_ver
-        _delete(spark, tmp)
-    raise RuntimeError(f"merge_branch lost {max_commit_retries} races at {root}")
+        return _carry_forward(
+            mdoc,
+            partitions=merged_parts,
+            deletion_vectors=merged_dvs,
+            stats_cols=stats_cols,
+            file_stats=merged_stats,
+            merged_from_branch={"name": name, "fork_version": fork},
+        )
+
+    # numbered above both heads, so every merged-in dir sits below it
+    new_ver = _commit(
+        spark, root, "merge_branch", build, max_commit_retries, above=bhead
+    )
+    delete_branch(spark, root, name)
+    return new_ver
 
 
 def _zorder_expr_sql(
@@ -2308,9 +2179,8 @@ def compact_table(
     z_sql = (
         _zorder_expr_sql(spark, snapshot, tuple(zorder_by)) if zorder_by else None
     )
-    for attempt in range(5):
-        base_ver = current_version(spark, root)
-        new_ver = base_ver + 1
+
+    def build(base_ver: int, new_ver: int, base_doc: dict) -> dict:
         # Unique attempt dir + orphan-on-loss, same as the merge path.
         ver_dir = posixpath.join(
             _VERSIONS, f"v{new_ver:08d}-{uuid.uuid4().hex[:8]}"
@@ -2345,7 +2215,6 @@ def compact_table(
         # so all deletion vectors are materialized: clear the list.
         # Zone maps are re-harvested for the fresh dir with whatever
         # stats columns the table was tracking (plus the z columns).
-        base_doc = _read_manifest_doc(spark, root, base_ver)
         stats_cols = tuple(
             dict.fromkeys(
                 tuple(base_doc.get("stats_cols", ())) + tuple(zorder_by)
@@ -2356,26 +2225,15 @@ def compact_table(
             if stats_cols
             else {}
         )
-        body = json.dumps(
-            {
-                "version": new_ver,
-                "committed_at": _now_ms(spark),
-                "partitions": new_manifest,
-                "deletion_vectors": [],
-                "stats_cols": list(stats_cols),
-                "file_stats": file_stats,
-                "constraints": base_doc.get("constraints", {}),
-                **_schema_meta(base_doc),
-            },
-            sort_keys=True,
+        return _carry_forward(
+            base_doc,
+            partitions=new_manifest,
+            deletion_vectors=[],
+            stats_cols=list(stats_cols),
+            file_stats=file_stats,
         )
-        tmp = posixpath.join(root, _MANIFESTS, f".tmp_{uuid.uuid4().hex}.json")
-        final = posixpath.join(root, _MANIFESTS, f"v{new_ver:08d}.json")
-        _write_file(spark, tmp, body)
-        if _rename(spark, tmp, final):
-            return new_ver
-        _delete(spark, tmp)
-    raise RuntimeError(f"compaction lost 5 commit races at {root}")
+
+    return _commit(spark, root, "compaction", build)
 
 
 def versioned_orphans(

@@ -319,12 +319,14 @@ ORDER BY doc_id_a
 @register("dedup_ngram_jaccard", oracle=NGRAM_JACCARD_ORACLE, tags=("llm", "dedup"))
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-trigram (3-shingle) Jaccard between consecutive doc_ids — the
-    n-gram-level exact near-dup measure (stricter than word-set Jaccard:
+    n-gram-level near-dup measure (stricter than word-set Jaccard:
     shared vocabulary in a different order scores ~0). Shingling is a JVM
     HOF (sequence + slice + concat_ws); the pair scores come from an
-    inverted-index equi-join on the shingle — the same join shape MinHash
-    banding approximates sub-quadratically, making this the exact oracle
-    for small candidate sets and the verify stage at scale."""
+    inverted-index equi-join on the shingle's xxhash64 — the same join
+    shape MinHash banding approximates sub-quadratically. Shingles are
+    keyed by their 64-bit hash, not their text, so the score is exact
+    up to hash collisions: two distinct shingles sharing a hash would
+    count as shared."""
     docs = load_table(spark, sf_dir, "documents")
     ws = F.split("text", " ")
     trigrams = F.when(

@@ -217,7 +217,9 @@ def ml_bleu_ngram_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     n-gram only scores up to its count in THE SAME doc's reference
     (sum of least(c, r)), which is exactly one left join on
     (doc, n, gram) between two count tables — no cross-doc work, no
-    gram table ever leaves its doc key. 100 TB shape: counts are
+    gram table ever leaves its doc key. Grams are keyed by their
+    xxhash64, not their text, so the counts are exact up to hash
+    collisions within a doc. 100 TB shape: counts are
     map-side-combinable groupBys keyed by (doc, n, gram); the join
     key contains doc_id so Spark co-partitions both sides in one
     exchange each; numerators/denominators are exact BIGINTs (the
