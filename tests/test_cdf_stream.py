@@ -7,8 +7,12 @@ from __future__ import annotations
 
 import datetime
 import shutil
+import sys
 import tempfile
+import threading
 import uuid
+from concurrent.futures import ThreadPoolExecutor
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -38,13 +42,13 @@ def _mk_table(spark, root):
     )
 
 
-def _run_stream(spark, root, starting=0):
+def _run_stream(spark, root, starting=0, ddl=DDL):
     register_cdf_source(spark)
     sdf = (
         spark.readStream.format("versioned_cdf")
         .option("path", root)
         .option("keycols", "k")
-        .option("tableschema", DDL)
+        .option("tableschema", ddl)
         .option("startingversion", str(starting))
         .load()
     )
@@ -198,35 +202,19 @@ def test_stream_across_optimize_emits_no_phantom_changes(spark):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_stream_across_restore_errors_cleanly(spark):
-    """RESTORE to a pre-delete snapshot drops deletion vectors without
-    rewriting their partitions — keys reappear with nothing to diff, so
-    the stream must FAIL with a clear message, not emit a wrong feed."""
+def test_stream_across_restore_matches_read_changes(spark):
+    """RESTORE to a pre-delete snapshot drops a deletion vector without
+    rewriting its partitions: the keys it deleted reappear, and the
+    stream emits them as inserts, exactly as the batch diff does."""
     root = tempfile.mkdtemp(prefix=f"us_sdps_cdfrst_{uuid.uuid4().hex[:8]}_")
     try:
-        _mk_table(spark, root)  # v4 = DV delete
-        V.restore_version(spark, root, 3)  # v5: DV dropped, dirs unchanged
-        with pytest.raises(Exception, match="cannot stream across"):
-            register_cdf_source(spark)
-            sdf = (
-                spark.readStream.format("versioned_cdf")
-                .option("path", root)
-                .option("keycols", "k")
-                .option("tableschema", DDL)
-                .option("startingversion", "4")
-                .load()
-            )
-            name = f"cdf_rst_{uuid.uuid4().hex[:8]}"
-            q = (
-                sdf.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            if q.exception() is not None:
-                raise q.exception()
+        _mk_table(spark, root)  # v4 = DV delete of k=1, k=200
+        v_rst = V.restore_version(spark, root, 3)  # v5: DV dropped, dirs unchanged
+        out = _run_stream(spark, root, starting=4)
+        stream_v = out.filter(F.col("_commit_version") == v_rst)
+        batch = V.read_changes(spark, root, 4, v_rst, key_cols=("k",))
+        assert _norm(stream_v) == _norm(batch)
+        assert _norm(stream_v) == [(1, 1, 10, "insert"), (200, 7, 5, "insert")]
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -416,3 +404,90 @@ def test_stream_timestamp_key_matches_read_changes(spark):
         assert out.count() == 4
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def _upsert(spark, root, rows, ddl):
+    V.versioned_merge_upsert(
+        spark,
+        spark.createDataFrame(rows, ddl),
+        root,
+        key_cols=("k",),
+        partition_cols=("band",),
+    )
+
+
+def test_stream_decimal_value_column_matches_read_changes(spark):
+    """A `decimal(p,s)` value column: the comma inside the type must not
+    split the table schema, and every commit streams the batch diff."""
+    ddl = "k long, band long, px decimal(10,2)"
+    root = tempfile.mkdtemp(prefix=f"us_sdps_cdfdec_{uuid.uuid4().hex[:8]}_")
+    d = Decimal
+    try:
+        _upsert(spark, root, [(1, 0, d("1.10")), (2, 0, d("2.20")), (3, 1, d("3.30"))], ddl)
+        _upsert(spark, root, [(1, 0, d("1.15")), (4, 1, d("4.40"))], ddl)
+        V.versioned_delete(
+            spark, spark.createDataFrame([(3,)], "k long"), root, key_cols=("k",)
+        )
+        out = _run_stream(spark, root, starting=0, ddl=ddl)
+
+        def norm(df):
+            return sorted(tuple(r) for r in df.select("k", "band", "px", "_change_type").collect())
+
+        for v in (2, 3):
+            batch = V.read_changes(spark, root, v - 1, v, key_cols=("k",))
+            assert norm(out.filter(F.col("_commit_version") == v)) == norm(batch), v
+        assert norm(out.filter(F.col("_commit_version") == 2)) == [
+            (1, 0, d("1.15"), "update_postimage"),
+            (4, 1, d("4.40"), "insert"),
+        ]
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_rewrite_gaining_a_column_reports_update(spark):
+    """A partition written before column `x` existed, rewritten with `x`
+    set and its other values unchanged, is an update in both the batch
+    diff and the stream: the pruned diff still compares every column of
+    the full snapshots."""
+    ddl = "k long, band long, val long, x long"
+    root = tempfile.mkdtemp(prefix=f"us_sdps_cdfcol_{uuid.uuid4().hex[:8]}_")
+    try:
+        _upsert(spark, root, [(0, 0, 10), (1, 1, 11)], DDL)
+        _upsert(spark, root, [(1, 1, 11, 7)], ddl)  # v2: band 1 gains x
+        _upsert(spark, root, [(0, 0, 10, 5)], ddl)  # v3: band 0 gains x, same val
+        batch = V.read_changes(spark, root, 2, 3, key_cols=("k",))
+        out = _run_stream(spark, root, starting=2, ddl=ddl)
+        for df in (batch, out):
+            assert sorted(
+                tuple(r) for r in df.select("k", "band", "val", "x", "_change_type").collect()
+            ) == [(0, 0, 10, 5, "update_postimage")]
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_register_cdf_source_concurrently(spark):
+    """Threads that each hold an active session may register the source
+    at the same moment (a concurrent bench pool running the CDF
+    queries): every call must succeed."""
+    errors = []
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for _ in range(20):
+            session = spark.newSession()
+            barrier = threading.Barrier(8, timeout=60)
+
+            def register():
+                session._jvm.SparkSession.setActiveSession(session._jsparkSession)
+                barrier.wait()
+                try:
+                    register_cdf_source(session)
+                except Exception as e:  # noqa: BLE001 - asserted below
+                    errors.append(e)
+
+            with ThreadPoolExecutor(8) as pool:
+                for f in [pool.submit(register) for _ in range(8)]:
+                    f.result(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert errors == []

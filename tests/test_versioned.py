@@ -401,6 +401,86 @@ def test_read_changes_all_change_types(spark, root):
     ]
 
 
+def test_changed_partitions_compares_owner_and_gating_dvs():
+    """The change planner is a pure manifest diff: a partition changed
+    iff its owning dir or the set of DVs gating that dir differs. A DV
+    older than the dir it would filter gates nothing."""
+    dv2 = {"dir": "dvs/dv-a", "version": 2}
+    dv5 = {"dir": "dvs/dv-b", "version": 5}
+    v1, v3, v4 = (f"versions/v0000000{n}-0{n}" for n in (1, 3, 4))
+    lo = {
+        "partitions": {"s=A": v1, "s=B": v1, "s=C": v3, "s=D": v1},
+        "deletion_vectors": [dv2],
+    }
+    hi = {
+        "partitions": {"s=A": v1, "s=B": v4, "s=C": v3, "s=E": v4},
+        "deletion_vectors": [],
+    }
+    # A: dv2 dropped; B: repointed; C: dv2 never gated v3; D gone; E new
+    assert V._changed_partitions(lo, hi) == ["s=A", "s=B", "s=D", "s=E"]
+    assert V._changed_partitions(
+        {**lo, "deletion_vectors": [dv2, dv5]}, {**lo, "deletion_vectors": [dv5, dv2]}
+    ) == []
+    assert V._changed_partitions({}, hi) == sorted(hi["partitions"])
+
+
+def _parquet_scans(df):
+    """(partitions read, files read) of each parquet scan in `df`'s
+    executed plan (collect `df` first)."""
+    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        node = leaves.apply(i)
+        if node.getClass().getSimpleName() == "FileSourceScanExec":
+            m = node.metrics()
+            out.append((m.apply("numPartitions").value(), m.apply("numFiles").value()))
+    return out
+
+
+def test_read_changes_scans_only_changed_partitions(spark, root):
+    """Restating one of six symbols: the change feed equals the diff of
+    the two full snapshots, and each snapshot's scan reads only the
+    restated partition."""
+    syms = [f"S{i}" for i in range(6)]
+    V.versioned_merge_upsert(
+        spark,
+        _mk(spark, [(s, t, float(t)) for s in syms for t in (1, 2)]),
+        root,
+        ("symbol", "ts"),
+        files_per_partition=1,
+    )
+    V.versioned_merge_upsert(
+        spark,
+        _mk(spark, [("S3", 1, 99.0), ("S3", 3, 3.0)]),
+        root,
+        ("symbol", "ts"),
+        files_per_partition=1,
+    )
+    lo, hi = (
+        {(r.symbol, r.ts): r.px for r in V.read_versioned(spark, root, v).collect()}
+        for v in (1, 2)
+    )
+    full_diff = sorted(
+        [(*k, hi[k], "insert") for k in hi.keys() - lo.keys()]
+        + [(*k, None, "delete") for k in lo.keys() - hi.keys()]
+        + [(*k, hi[k], "update_postimage") for k in lo.keys() & hi.keys() if lo[k] != hi[k]]
+    )
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        ch = V.read_changes(spark, root, 1, 2, key_cols=("symbol", "ts"))
+        got = sorted((r.symbol, r.ts, r.px, r._change_type) for r in ch.collect())
+        scans = _parquet_scans(ch)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert got == full_diff == [
+        ("S3", 1, 99.0, "update_postimage"),
+        ("S3", 3, 3.0, "insert"),
+    ]
+    # one scan per snapshot; the five unchanged symbols are never read
+    assert scans == [(1, 1), (1, 1)]
+
+
 def test_rename_is_exclusive_under_contention(spark, tmp_path):
     """The publish primitive is a true CAS: N threads all trying to
     publish the same destination — exactly one wins, and the winner's

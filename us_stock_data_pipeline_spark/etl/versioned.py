@@ -393,6 +393,36 @@ def _dir_version(ver_dir: str) -> int:
     return int(name[1:9])
 
 
+def _gating_dvs(doc: dict, ver_dir: str) -> list[dict]:
+    """The deletion vectors of manifest `doc` that filter rows of the
+    data dir `ver_dir`: those committed at or after the version that
+    wrote it. Version scoping is what makes merge-on-read deletes
+    composable with later upserts: a DV committed at D tombstones only
+    rows written at versions <= D, so a key re-inserted at D+1 (which
+    lands in a v{D+1} dir) is NOT swallowed by the old tombstone."""
+    written = _dir_version(ver_dir)
+    return [dv for dv in doc.get("deletion_vectors", []) if dv["version"] >= written]
+
+
+def _changed_partitions(lo_doc: dict, hi_doc: dict) -> list[str]:
+    """The partition dirs whose rows can differ between the snapshots of
+    two manifests (sorted): those whose owning version dir differs, or
+    whose gating deletion-vector set (`_gating_dvs`) differs. The rule
+    is exact: any other partition reads the same files through the same
+    DVs in both snapshots, so it cannot produce a change row. Pure
+    metadata — `read_changes` and the `versioned_cdf` stream both plan
+    from it."""
+
+    def image(doc: dict, part_dir: str):
+        owner = doc.get("partitions", {}).get(part_dir)
+        if owner is None:
+            return None
+        return owner, {(dv["dir"], dv["version"]) for dv in _gating_dvs(doc, owner)}
+
+    parts = set(lo_doc.get("partitions", {})) | set(hi_doc.get("partitions", {}))
+    return sorted(d for d in parts if image(lo_doc, d) != image(hi_doc, d))
+
+
 # --------------------------------------------------------------------------
 # The commit path: one carry-forward rule, one CAS publish
 # --------------------------------------------------------------------------
@@ -467,23 +497,14 @@ def _commit(
 
 
 def _apply_dvs(
-    spark: SparkSession,
-    root: str,
-    df: DataFrame,
-    dvs: list[dict],
-    data_version: int,
+    spark: SparkSession, root: str, df: DataFrame, dvs: list[dict]
 ) -> DataFrame:
-    """Filter `df` (rows owned by a dir committed at `data_version`)
-    through every deletion vector that POSTDATES it. Version scoping is
-    what makes merge-on-read deletes composable with later upserts: a
-    DV committed at D tombstones only rows written at versions <= D, so
-    a key re-inserted at D+1 (which lands in a v{D+1} dir) is NOT
-    swallowed by the old tombstone. Each DV is a tiny key parquet —
-    broadcast anti-joins, no shuffle on the data side."""
+    """Filter `df` through the deletion vectors `dvs` (the `_gating_dvs`
+    of the dir it reads). Each DV is a tiny key parquet — broadcast
+    anti-joins, no shuffle on the data side."""
     for dv in dvs:
-        if dv["version"] >= data_version:
-            keys = spark.read.parquet(posixpath.join(root, dv["dir"]))
-            df = df.join(F.broadcast(keys), list(keys.columns), "left_anti")
+        keys = spark.read.parquet(posixpath.join(root, dv["dir"]))
+        df = df.join(F.broadcast(keys), list(keys.columns), "left_anti")
     return df
 
 
@@ -685,6 +706,56 @@ def _bloom_keeps(stats: dict | None, key_filter: dict) -> bool:
     return True
 
 
+def _snapshot_doc(spark: SparkSession, root: str, version: int | None) -> dict:
+    """The manifest of `version` (None = the current head)."""
+    if version is None:
+        version = current_version(spark, root)
+    if version == 0:
+        raise FileNotFoundError(f"no committed version under {root}")
+    return _read_manifest_doc(spark, root, version)
+
+
+def _plan_files(
+    doc: dict,
+    partition_filter=None,
+    stat_filter: dict | None = None,
+    key_filter: dict | None = None,
+) -> tuple[dict[str, list[str]], list[str]]:
+    """Resolve manifest `doc` to the paths a reader must scan: (kept:
+    {owning ver_dir -> [file or partition-dir paths, relative to root]},
+    skipped: [file paths pruned by zone maps or blooms]). Partitions
+    with no recorded stats fall back to whole-dir scans."""
+    manifest = doc["partitions"]
+    if partition_filter is not None:
+        manifest = {
+            d: v
+            for d, v in manifest.items()
+            if partition_filter(_parse_partition_values(d))
+        }
+        if not manifest:
+            raise LookupError("partition_filter pruned every partition")
+    file_stats: dict[str, dict] = doc.get("file_stats", {})
+    kept: dict[str, list[str]] = {}
+    skipped: list[str] = []
+    for part_dir, ver_dir in manifest.items():
+        prefix = posixpath.join(ver_dir, part_dir) + "/"
+        files = (
+            [f for f in file_stats if f.startswith(prefix)]
+            if (stat_filter or key_filter)
+            else []
+        )
+        if not files:
+            kept.setdefault(ver_dir, []).append(posixpath.join(ver_dir, part_dir))
+        for f in files:
+            if _stat_filter_keeps(file_stats[f], stat_filter or {}) and _bloom_keeps(
+                file_stats[f], key_filter or {}
+            ):
+                kept.setdefault(ver_dir, []).append(f)
+            else:
+                skipped.append(f)
+    return kept, skipped
+
+
 def plan_snapshot_files(
     spark: SparkSession,
     root: str,
@@ -696,29 +767,69 @@ def plan_snapshot_files(
     pruned. Returns (kept: {owning ver_dir -> [file or partition-dir
     paths, relative to root]}, skipped: [file paths pruned by stats]).
     Partitions with no recorded stats fall back to whole-dir scans."""
-    if version is None:
-        version = current_version(spark, root)
-    if version == 0:
-        raise FileNotFoundError(f"no committed version under {root}")
-    doc = _read_manifest_doc(spark, root, version)
-    manifest = doc["partitions"]
-    file_stats: dict[str, dict] = doc.get("file_stats", {})
-    kept: dict[str, list[str]] = {}
-    skipped: list[str] = []
-    for part_dir, ver_dir in manifest.items():
-        prefix = posixpath.join(ver_dir, part_dir) + "/"
-        files = [f for f in file_stats if f.startswith(prefix)]
-        if not files or not (stat_filter or key_filter):
-            kept.setdefault(ver_dir, []).append(posixpath.join(ver_dir, part_dir))
-            continue
-        for f in files:
-            if _stat_filter_keeps(
-                file_stats.get(f), stat_filter or {}
-            ) and _bloom_keeps(file_stats.get(f), key_filter or {}):
-                kept.setdefault(ver_dir, []).append(f)
-            else:
-                skipped.append(f)
-    return kept, skipped
+    doc = _snapshot_doc(spark, root, version)
+    return _plan_files(doc, stat_filter=stat_filter, key_filter=key_filter)
+
+
+def _read_snapshot(
+    spark: SparkSession,
+    root: str,
+    doc: dict,
+    partition_filter=None,
+    stat_filter: dict | None = None,
+    key_filter: dict | None = None,
+    only: set[str] | None = None,
+) -> DataFrame:
+    """The snapshot manifest `doc` describes, as `read_versioned` reads
+    it. With `only` (a set of partition dirs), only those partitions
+    are scanned; the frame keeps the full snapshot's columns."""
+    kept, _ = _plan_files(doc, partition_filter, stat_filter, key_filter)
+    if not kept:
+        raise LookupError("stat/key filters pruned every file of every partition")
+    pieces = []
+    for ver_dir, rel_paths in sorted(kept.items()):
+        base = posixpath.join(root, ver_dir)
+        paths = [posixpath.join(root, p) for p in sorted(rel_paths)]
+        piece = spark.read.option("basePath", base).parquet(*paths)
+        if only is not None:
+            # re-read just the wanted dirs under the whole dir's schema, so
+            # columns and partition types match the unpruned read exactly
+            wanted = sorted(
+                posixpath.join(base, d)
+                for d, v in doc["partitions"].items()
+                if v == ver_dir and d in only
+            )
+            piece = (
+                spark.read.schema(piece.schema).option("basePath", base).parquet(*wanted)
+                if wanted
+                else piece.where(F.lit(False))
+            )
+        pieces.append(_apply_dvs(spark, root, piece, _gating_dvs(doc, ver_dir)))
+    out = pieces[0]
+    for df in pieces[1:]:
+        # allowMissingColumns = schema evolution across commits: a dir
+        # written before a column was added simply reads it as NULL,
+        # exactly Delta/Iceberg's add-column semantics (drops/renames
+        # still require a rewrite, as there).
+        out = out.unionByName(df, allowMissingColumns=True)
+    # Declared schema evolution (ALTER TABLE ADD/DROP/RENAME COLUMN):
+    # the manifest of THIS version records metadata-only schema
+    # commits — dropped columns are projected away (data files keep
+    # the physical values, Delta-column-mapping style),
+    # ADDed-but-never-written columns materialize as typed NULLs, and
+    # renamed columns alias their physical name LAST so both dropped
+    # and added records stay in physical-name space. Time travel
+    # naturally shows each version's own schema.
+    dropped = set(doc.get("dropped_columns", []))
+    if dropped:
+        out = out.select(*[c for c in out.columns if c not in dropped])
+    for cname, ctype in doc.get("added_columns", []):
+        if cname not in out.columns:
+            out = out.withColumn(cname, F.lit(None).cast(ctype))
+    for vis, phys in doc.get("renamed_columns", []):
+        if phys in out.columns:
+            out = out.withColumnRenamed(phys, vis)
+    return out
 
 
 def read_versioned(
@@ -755,71 +866,8 @@ def read_versioned(
         if version is not None:
             raise ValueError("pass either version or ref, not both")
         version = resolve_ref(spark, root, ref)
-    if version is None:
-        version = current_version(spark, root)
-    if version == 0:
-        raise FileNotFoundError(f"no committed version under {root}")
-    doc = _read_manifest_doc(spark, root, version)
-    manifest = doc["partitions"]
-    dvs = doc.get("deletion_vectors", [])
-    if partition_filter is not None:
-        manifest = {
-            d: v
-            for d, v in manifest.items()
-            if partition_filter(_parse_partition_values(d))
-        }
-        if not manifest:
-            raise LookupError("partition_filter pruned every partition")
-    file_stats: dict[str, dict] = doc.get("file_stats", {})
-    by_ver: dict[str, list[str]] = {}
-    for part_dir, ver_dir in manifest.items():
-        prefix = posixpath.join(ver_dir, part_dir) + "/"
-        stat_files = (
-            [f for f in file_stats if f.startswith(prefix)]
-            if (stat_filter or key_filter)
-            else []
-        )
-        if not stat_files:
-            by_ver.setdefault(ver_dir, []).append(posixpath.join(ver_dir, part_dir))
-            continue
-        for f in stat_files:
-            if _stat_filter_keeps(
-                file_stats.get(f), stat_filter or {}
-            ) and _bloom_keeps(file_stats.get(f), key_filter or {}):
-                by_ver.setdefault(ver_dir, []).append(f)
-    if not by_ver:
-        raise LookupError("stat/key filters pruned every file of every partition")
-    pieces = []
-    for ver_dir, rel_paths in sorted(by_ver.items()):
-        base = posixpath.join(root, ver_dir)
-        paths = [posixpath.join(root, p) for p in sorted(rel_paths)]
-        piece = spark.read.option("basePath", base).parquet(*paths)
-        pieces.append(_apply_dvs(spark, root, piece, dvs, _dir_version(ver_dir)))
-    out = pieces[0]
-    for df in pieces[1:]:
-        # allowMissingColumns = schema evolution across commits: a dir
-        # written before a column was added simply reads it as NULL,
-        # exactly Delta/Iceberg's add-column semantics (drops/renames
-        # still require a rewrite, as there).
-        out = out.unionByName(df, allowMissingColumns=True)
-    # Declared schema evolution (ALTER TABLE ADD/DROP/RENAME COLUMN):
-    # the manifest of THIS version records metadata-only schema
-    # commits — dropped columns are projected away (data files keep
-    # the physical values, Delta-column-mapping style),
-    # ADDed-but-never-written columns materialize as typed NULLs, and
-    # renamed columns alias their physical name LAST so both dropped
-    # and added records stay in physical-name space. Time travel
-    # naturally shows each version's own schema.
-    dropped = set(doc.get("dropped_columns", []))
-    if dropped:
-        out = out.select(*[c for c in out.columns if c not in dropped])
-    for cname, ctype in doc.get("added_columns", []):
-        if cname not in out.columns:
-            out = out.withColumn(cname, F.lit(None).cast(ctype))
-    for vis, phys in doc.get("renamed_columns", []):
-        if phys in out.columns:
-            out = out.withColumnRenamed(phys, vis)
-    return out
+    doc = _snapshot_doc(spark, root, version)
+    return _read_snapshot(spark, root, doc, partition_filter, stat_filter, key_filter)
 
 
 # --------------------------------------------------------------------------
@@ -1196,7 +1244,6 @@ def versioned_merge_upsert(
                 _VERSIONS, f"v{new_ver:08d}-{uuid.uuid4().hex[:8]}"
             )
             manifest = doc.get("partitions", {})
-            dvs = doc.get("deletion_vectors", [])
             # Existing rows of touched partitions only (manifest prune).
             old_touched = {d: manifest[d] for d in touched if d in manifest}
             merged = staged
@@ -1219,7 +1266,7 @@ def versioned_merge_upsert(
                     # Honor live deletion vectors while rewriting: the
                     # rewrite MATERIALIZES deletes for touched partitions
                     # (their survivors move above every DV's horizon).
-                    old = _apply_dvs(spark, root, old, dvs, _dir_version(v))
+                    old = _apply_dvs(spark, root, old, _gating_dvs(doc, v))
                     keep = old.join(F.broadcast(keys), list(key_cols), "left_anti")
                     # allowMissingColumns: an update batch may ADD columns
                     # (schema evolution) — surviving old rows read them as
@@ -1392,14 +1439,17 @@ def read_changes(
     delete}; non-key columns carry the TO-snapshot values (NULL for
     deletes). This is how downstream consumers subscribe incrementally
     (sync a mart, invalidate a cache, feed a stream) without rescanning
-    the table: both snapshot reads are manifest-pruned and the diff is
-    one full-outer join on the keys, hash-partitioned on both sides —
-    no broadcast of anything table-sized. A production variant would
-    additionally prune to partitions whose owning version changed
-    between the manifests (driver-side dict compare — metadata only);
-    kept simple here because the fixture's partition count is small."""
-    lo = read_versioned(spark, root, from_version)
-    hi = read_versioned(spark, root, to_version)
+    the table. The two manifests decide which partitions can differ
+    (`_changed_partitions`, the planner the `versioned_cdf` stream uses
+    too); both snapshot reads scan only those, while keeping the full
+    snapshots' columns, and the diff is one full-outer join on the
+    keys, hash-partitioned on both sides — no broadcast of anything
+    table-sized. No changed partition means an empty frame."""
+    lo_doc = _snapshot_doc(spark, root, from_version)
+    hi_doc = _snapshot_doc(spark, root, to_version)
+    changed = set(_changed_partitions(lo_doc, hi_doc))
+    lo = _read_snapshot(spark, root, lo_doc, only=changed)
+    hi = _read_snapshot(spark, root, hi_doc, only=changed)
     keys = list(key_cols)
     val_cols = [c for c in hi.columns if c not in keys]
     # presence comes from literal flag columns and the join is null-safe

@@ -199,8 +199,8 @@ ORDER BY commit_version, change_type
 def stream_versioned_cdf_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDF stream across an OPTIMIZE commit (round 13, VERDICT r12 #6).
     compact_table rewrites every partition data-identically while
-    materializing deletion vectors; the stream's repoint tasks filter
-    the pre-image through the DVs the commit drops, so old-minus-DV
+    materializing deletion vectors; the stream's per-partition tasks
+    filter the pre-image through the DVs the commit drops, so old-minus-DV
     equals new and the commit emits NOTHING — no phantom inserts for
     DV-materialized rows, no spurious deletes. Commits before and after
     the compaction stream normally; the 'compaction' output row pins
